@@ -40,8 +40,6 @@ CHANGE_SCHEMA = T.StructType(
     ]
 )
 
-ENVELOPE_COLUMNS = [f.name for f in CHANGE_SCHEMA.fields]
-
 
 def str_map(df_columns: list[str], cast_overrides: dict[str, Column] | None = None) -> Column:
     """Build the text-encoded row image the reference emits
@@ -77,12 +75,6 @@ def typed_column(image: str, name: str, dtype: str) -> Column:
     postrack.go:381) re-acquire types, per table schema.
     """
     return F.element_at(F.col(image), name).cast(dtype)
-
-
-def typed_view(changes: DataFrame, image: str, schema: dict[str, str]) -> DataFrame:
-    """Generate a typed per-table view from the envelope map."""
-    cols = [typed_column(image, name, dtype).alias(name) for name, dtype in schema.items()]
-    return changes.select(*ENVELOPE_COLUMNS, *cols)
 
 
 def prune_images(changes: DataFrame, cols: list[str]) -> DataFrame:

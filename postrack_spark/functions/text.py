@@ -37,13 +37,6 @@ def stopword_count(col: Column) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(STOPWORDS)))
 
 
-def avg_token_length(col: Column) -> Column:
-    toks = tokens(col)
-    return F.aggregate(
-        toks, F.lit(0.0), lambda acc, t: acc + F.length(t)
-    ) / F.size(toks)
-
-
 def quality_score(col: Column) -> Column:
     """Composite [0,1]-ish quality heuristic: rewards mid-length docs,
     penalizes stopword-heavy and single-char-token text. Formula is

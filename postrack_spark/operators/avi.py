@@ -25,10 +25,6 @@ from __future__ import annotations
 import struct
 
 
-def _fourcc(b: bytes) -> bytes:
-    return b
-
-
 def parse_avi(payload: bytes) -> tuple[list[bytes], dict]:
     """Parse an AVI byte string -> (frame payloads, meta).
 

@@ -475,11 +475,6 @@ oracle MUST use this one string; a one-site edit desynchronizes the
 rest (review finding)."""
 
 
-def quantized_embeddings(df, out_col: str = "qe"):
-    """df.embedding milli-quantized into ``out_col`` (array<long>)."""
-    return df.withColumn(out_col, F.expr(QUANTIZE_MILLI_EXPR))
-
-
 def cms_bucket(r, k):
     """Portable CMS row-hash bucket: md5-derived (engine-portable),
     shared by cms_report, agg_count_min_sketch, and the streaming

@@ -77,10 +77,11 @@ class FrameFileWriter:
     whole stream up to that file: the file containing the StreamCommit
     emits all surviving rows exactly once, files containing only
     segments emit none (their buffered rows never commit there), so
-    per-file parallel decode (one DataSource partition per file) stays
-    correct with zero cross-file state. Memory: the cache holds open
-    streams only — the same bound the decoder's own commit-time buffer
-    already imposes; both spill classes arrive together.
+    per-file decode (a fresh decoder state per file, however the
+    DataSource packs files into partitions) stays correct with zero
+    cross-file state. Memory: the cache holds open streams only — the
+    same bound the decoder's own commit-time buffer already imposes;
+    both spill classes arrive together.
     """
 
     def __init__(self, out_dir: str, max_frames: int = 4096,

@@ -19,9 +19,14 @@ Capture-file contract:
 Offsets are {"file_index": N}: a micro-batch reads files [start, end)
 — resuming from a checkpoint continues after the last committed file,
 the Spark form of the reference's lsn+1 restart (postrack.go:297).
-commit() appends the acked offset to an ack log — the keepAlive
+commit() records the acked offset in an ack log — the keepAlive
 StandbyStatusUpdate analog (postrack.go:107-117) but issued only after
 the micro-batch is durably checkpointed (fixes race q3).
+
+Partitioning: a file range is packed into contiguous partitions of at
+least PARTITION_TARGET_BYTES of capture files each (the last takes the
+remainder), because a Python DataSource task has a fixed launch cost
+that dwarfs decoding one small file.
 """
 
 from __future__ import annotations
@@ -41,6 +46,14 @@ from postrack_spark.cdc.envelope import CHANGE_SCHEMA
 from postrack_spark.sources.pgoutput import DecoderState, decode_xlogdata_stream
 
 FRAME_FILE_SUFFIX = ".pgout"
+
+# Bytes of capture files one read partition packs before it closes. A
+# Python DataSource task costs ~0.3 s to launch on a 4-core host even
+# with reused workers (1/6/24/60 partitions of a trivial source: 0.32 /
+# 0.73 / 1.97 / 4.74 s) - about what decoding ~3.7 MB of frames takes
+# (~110k events/s at ~112 B/event). Below this size per task, launches
+# cost more than the decode they parallelise.
+PARTITION_TARGET_BYTES = 4 << 20
 
 
 def frames_to_blob(frames: list[bytes]) -> bytes:
@@ -84,11 +97,22 @@ def _capture_files(capture_dir: str) -> list[str]:
     )
 
 
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """One JSON line, swapped in whole: a reader never sees a partial
+    write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(json.dumps(obj) + "\n")
+    os.replace(tmp, path)
+
+
 def _decode_files(capture_dir: str, names: list[str], events: set[str], start_lsn: int):
-    state = DecoderState()
     for name in names:
         frames = read_frame_file(os.path.join(capture_dir, name))
-        for row in decode_xlogdata_stream(frames, state):
+        # a fresh state per file: files are self-contained (module
+        # docstring), so packing files into one partition decodes each
+        # exactly as if it were read alone
+        for row in decode_xlogdata_stream(frames, DecoderState()):
             if row["op"] in events and row["lsn"] > start_lsn:
                 yield (
                     row["lsn"],
@@ -127,16 +151,32 @@ class CDCFilePartition(InputPartition):
         self.names = names
 
 
+def _packed_partitions(capture_dir: str, names: list[str]) -> list[CDCFilePartition]:
+    """Contiguous runs of `names`, in order, each closed once it holds
+    PARTITION_TARGET_BYTES; the last takes the remainder and an empty
+    range yields one empty partition. Order within a file is kept; WAL
+    order across files is restored downstream via the lsn column
+    wherever order matters (SURVEY §4.2)."""
+    parts: list[CDCFilePartition] = []
+    run: list[str] = []
+    size = 0
+    for name in names:
+        run.append(name)
+        size += os.path.getsize(os.path.join(capture_dir, name))
+        if size >= PARTITION_TARGET_BYTES:
+            parts.append(CDCFilePartition(run))
+            run, size = [], 0
+    if run or not parts:
+        parts.append(CDCFilePartition(run))
+    return parts
+
+
 class PostgresCDCBatchReader(DataSourceReader):
     def __init__(self, options: dict) -> None:
         self.opts = _Options(options)
 
     def partitions(self):
-        # one partition per capture file: decode parallelism scales with
-        # the capture roll interval, order restored downstream via lsn
-        return [CDCFilePartition([n]) for n in _capture_files(self.opts.capture_dir)] or [
-            CDCFilePartition([])
-        ]
+        return _packed_partitions(self.opts.capture_dir, _capture_files(self.opts.capture_dir))
 
     def read(self, partition: CDCFilePartition):
         yield from _decode_files(
@@ -160,7 +200,9 @@ class PostgresCDCStreamReader(DataSourceStreamReader):
         planning log (_progress.json, written in partitions()) covers
         that case. Seeding from planned-not-yet-committed offsets only
         affects PACING - Spark replays any uncommitted batch from its
-        checkpoint, so no data is skipped."""
+        checkpoint, so no data is skipped. The ack log holds one line
+        since commit() compacts it; logs written before that hold one
+        line per batch, hence the max."""
         best = 0
         ack = os.path.join(self.opts.capture_dir, "_acks.jsonl")
         try:
@@ -188,17 +230,13 @@ class PostgresCDCStreamReader(DataSourceStreamReader):
         return {"file_index": self._emitted}
 
     def partitions(self, start: dict, end: dict):
-        # one partition per capture file, like the batch reader: decode
-        # parallelism within a micro-batch scales with the number of
-        # files the batch spans; WAL order is restored downstream via
-        # the lsn column wherever order matters (SURVEY §4.2)
         names = _capture_files(self.opts.capture_dir)[start["file_index"] : end["file_index"]]
         self._emitted = max(self._emitted, end["file_index"])
-        tmp = os.path.join(self.opts.capture_dir, "_progress.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"file_index": self._emitted}, f)
-        os.replace(tmp, os.path.join(self.opts.capture_dir, "_progress.json"))
-        return [CDCFilePartition([n]) for n in names] or [CDCFilePartition([])]
+        _write_json_atomic(
+            os.path.join(self.opts.capture_dir, "_progress.json"),
+            {"file_index": self._emitted},
+        )
+        return _packed_partitions(self.opts.capture_dir, names)
 
     def read(self, partition: CDCFilePartition):
         yield from _decode_files(
@@ -208,11 +246,11 @@ class PostgresCDCStreamReader(DataSourceStreamReader):
     def commit(self, end: dict) -> None:
         """Ack AFTER durable processing (the keepAlive analog; a live
         capture process reads this log and advances the slot's
-        StandbyStatusUpdate)."""
+        StandbyStatusUpdate). Only the latest ack is kept: the log is
+        rewritten atomically, so restarts read one line however long
+        the stream has run."""
         self._emitted = max(self._emitted, end["file_index"])
-        ack = os.path.join(self.opts.capture_dir, "_acks.jsonl")
-        with open(ack, "a") as f:
-            f.write(json.dumps(end) + "\n")
+        _write_json_atomic(os.path.join(self.opts.capture_dir, "_acks.jsonl"), end)
 
 
 class PostgresCDCDataSource(DataSource):

@@ -6,13 +6,24 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections import Counter
+from unittest import mock
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from postrack_spark.streaming.sinks import read_view
 from postrack_spark.api import Conn, Table
 from postrack_spark.cdc import typed_column
-from postrack_spark.sources.postgres_cdc import register, write_frame_file
+from postrack_spark.sources import postgres_cdc
+from postrack_spark.sources.postgres_cdc import (
+    PostgresCDCBatchReader,
+    PostgresCDCStreamReader,
+    read_frame_file,
+    register,
+    write_frame_file,
+)
 from tests.test_pgoutput import ORDERS_COLS, TS, golden_frames
 from postrack_spark.sources.pgoutput import (
     encode_begin,
@@ -308,3 +319,76 @@ def test_scd2_history_via_conn(spark):
         (1, 14, 16, "F"),
         (2, 15, None, "O"),
     ]
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    sizes=st.lists(st.integers(0, 300), max_size=12),
+    target=st.integers(1, 700),
+)
+def test_packed_partitions_cover_files_contiguously(sizes, target):
+    """Partition packing: every capture file lands in exactly one
+    partition, partitions are contiguous runs in file order, each but
+    the last reaches the byte target (and closes as soon as it does),
+    and an empty range still plans one empty partition."""
+    names = [f"{i:06d}.pgout" for i in range(len(sizes))]
+    size = dict(zip(names, sizes))
+    with tempfile.TemporaryDirectory() as d:
+        for name in names:
+            with open(os.path.join(d, name), "wb") as f:
+                f.write(b"\0" * size[name])
+        with mock.patch.object(postgres_cdc, "PARTITION_TARGET_BYTES", target):
+            parts = [p.names for p in postgres_cdc._packed_partitions(d, names)]
+    assert [n for p in parts for n in p] == names
+    if names:
+        assert all(parts)
+    else:
+        assert parts == [[]]
+    for p in parts[:-1]:
+        assert sum(size[n] for n in p) >= target
+        assert sum(size[n] for n in p[:-1]) < target
+
+
+def test_both_readers_pack_ranges():
+    """Both readers plan through the packer: three small files are one
+    partition, and an empty stream range is one empty partition."""
+    d = _capture_dir_with_golden()
+    write_frame_file(os.path.join(d, "000002.pgout"), _more_inserts(1000, [31, 32]))
+    write_frame_file(os.path.join(d, "000003.pgout"), _more_inserts(2000, [41]))
+    opts = {"capture_dir": d}
+    all_files = [["000001.pgout", "000002.pgout", "000003.pgout"]]
+    assert [p.names for p in PostgresCDCBatchReader(opts).partitions()] == all_files
+    stream = PostgresCDCStreamReader(opts)
+    assert [p.names for p in stream.partitions({"file_index": 0}, {"file_index": 3})] == all_files
+    assert [p.names for p in stream.partitions({"file_index": 3}, {"file_index": 3})] == [[]]
+
+
+def test_packed_batch_read_matches_per_file_decode(spark):
+    """A packed partition decodes each file with its own state: the
+    batch read returns exactly the multiset of rows that decoding every
+    capture file alone yields."""
+    from postrack_spark.cdc.envelope import CHANGE_SCHEMA
+    from postrack_spark.sources.pgoutput import DecoderState, decode_xlogdata_stream
+
+    d = _capture_dir_with_golden()
+    write_frame_file(os.path.join(d, "000002.pgout"), _more_inserts(1000, [31, 32]))
+    write_frame_file(os.path.join(d, "000003.pgout"), _more_inserts(2000, [41]))
+    per_file = [
+        tuple(r[f.name] for f in CHANGE_SCHEMA.fields)
+        for name in sorted(os.listdir(d))
+        if name.endswith(".pgout")
+        for r in decode_xlogdata_stream(
+            read_frame_file(os.path.join(d, name)), DecoderState()
+        )
+    ]
+
+    def bag(df):
+        return Counter(
+            tuple(tuple(sorted(v.items())) if isinstance(v, dict) else v for v in r)
+            for r in df.collect()
+        )
+
+    register(spark)
+    got = bag(spark.read.format("postgres_cdc").option("capture_dir", d).load())
+    assert got == bag(spark.createDataFrame(per_file, CHANGE_SCHEMA))
+    assert sum(got.values()) == 9

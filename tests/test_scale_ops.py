@@ -470,7 +470,8 @@ def test_pin_small_concurrent_registry_safe(spark, sf_dir):
     thread constructs a query). Hammer it from 8 threads with colliding
     and distinct names past the LRU cap: no ValueError from racing
     remove/pop, and the registry stays internally consistent (order list
-    matches the dict, size within the cap)."""
+    matches the dict, size within the cap). The toy pins are released
+    afterwards and the earlier pins the race left standing restored."""
     import threading
 
     from postrack_spark import session as S
@@ -487,15 +488,32 @@ def test_pin_small_concurrent_registry_safe(spark, sf_dir):
         except BaseException as ex:  # noqa: BLE001 — collect to re-raise
             errors.append(ex)
 
-    threads = [threading.Thread(target=worker, args=(k,)) for k in range(8)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert not errors, errors
     with S._PIN_LOCK:
-        assert len(S._PINNED_ORDER) <= S._PINNED_MAX
-        assert sorted(S._PINNED_ORDER) == sorted(S._PINNED_SMALL.keys())
+        saved, saved_order = dict(S._PINNED_SMALL), list(S._PINNED_ORDER)
+    try:
+        threads = [threading.Thread(target=worker, args=(k,)) for k in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+        assert not errors, errors
+        with S._PIN_LOCK:
+            assert len(S._PINNED_ORDER) <= S._PINNED_MAX
+            assert sorted(S._PINNED_ORDER) == sorted(S._PINNED_SMALL.keys())
+    finally:
+        # Restore the earlier pins the race did not evict (evicted ones
+        # were unpersisted, as after any LRU eviction) and release the
+        # toy pins.
+        with S._PIN_LOCK:
+            live = {id(df) for df in S._PINNED_SMALL.values()}
+            kept = {n: df for n, df in saved.items() if id(df) in live}
+            kept_ids = {id(df) for df in kept.values()}
+            toys = [df for df in S._PINNED_SMALL.values() if id(df) not in kept_ids]
+            S._PINNED_SMALL.clear()
+            S._PINNED_SMALL.update(kept)
+            S._PINNED_ORDER[:] = [n for n in saved_order if n in kept]
+        for df in toys:
+            S._unpersist_quietly(df)
 
 
 def test_ivf_assign_unique_id_contract(spark):
