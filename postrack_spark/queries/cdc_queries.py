@@ -521,6 +521,8 @@ def cdc_sequence_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     captured stream (and the oracle recomputes them from the scripted
     generation rules, so a decode or replay bug that forges ops or
     reorders LSNs fails the hash gate, not just an eyeball check).
+    n_keys, n_events and the two per-key counters cover keyed events
+    only; dup_lsns covers every event.
     Plan: one key-partitioned window + per-key aggregate sharing its
     exchange (folds keys/events/first-op/after-delete counters in a
     single pass, nothing pinned) + one lsn-pruned duplicate count."""
@@ -544,7 +546,12 @@ def cdc_sequence_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the four counters. Duplicate-LSN detection needs an lsn-keyed
     # shuffle, so it stays a second pass — column-pruned to the lsn
     # alone (no envelope map is ever built on that branch).
-    ev = ch.select(key.alias("k"), "lsn", "op")
+    # Keyless events (a TRUNCATE carries neither image) belong to no
+    # key's history, so they are dropped before the window: otherwise
+    # the NULL partition would count as one more key with its own
+    # min_lsn and feed first_not_insert/ops_after_delete. The orders
+    # generation (and so the oracle) never yields a NULL key.
+    ev = ch.select(key.alias("k"), "lsn", "op").filter(F.col("k").isNotNull())
     w = Window.partitionBy("k")
     ev2 = ev.select(
         "k",
@@ -1588,8 +1595,8 @@ def cdc_pgoutput_two_phase_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     mapInPandas pass writes one self-contained .pgout frame file per
     partition, each headed by its Relation frame per the capture
     contract), and decoding runs through the postgres_cdc DataSource,
-    which packs the files into partitions of >= 4 MB (a Python task's
-    ~0.3 s launch cost outweighs decoding one small file) and decodes
+    which packs the files into partitions of >= 1 MB (a Python task's
+    fixed cost outweighs decoding one small file) and decodes
     each file with its own state. Only committed gids may surface: the
     rollup must equal the even-custkey half of orders, with
     n_txids pinning exactly-once emission per prepared transaction.

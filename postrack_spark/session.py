@@ -11,7 +11,16 @@ the driver may hand us its own session).
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import os
+import re
+import shlex
+import sys
+import tempfile
+import threading as _threading
+import zipfile
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,9 +59,101 @@ def get_spark(app_name: str = "postrack-spark", cpus: int | None = None) -> Spar
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
     )
-    spark = builder.getOrCreate()
+    # Spark reads PYSPARK_PYTHON when the context (and its JVM) starts;
+    # an already running context keeps the worker launch it has.
+    with _worker_launch():
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Spark puts $SPARK_HOME/python/lib/pyspark.zip first on every Python
+# worker's PYTHONPATH, followed by the spark-core jar. The zip holds
+# sources only, so each fresh process (a pyspark.daemon, a planner
+# runner, a query's python_streaming_source_runner) recompiles pyspark
+# from it, ~1.3 s of imports against ~0.3 s from site-packages. Worse,
+# worker_util.setup_spark_files calls importlib.invalidate_caches() per
+# task, and CPython 3.11 then re-reads the zip directory once per
+# zipimporter (17 per worker) and the 5k-entry jar directory too:
+# ~0.2 s per task. The launcher below drops both entries and execs the
+# driver's interpreter, whose installed pyspark is byte-compiled. It is
+# used only when that pyspark is the version inside the zip, so the
+# worker code is the same either way. The jar holds no Python modules.
+_LAUNCHER = """#!/bin/sh
+# Spark Python worker launcher (postrack_spark.session): the driver's
+# interpreter on its installed pyspark, without pyspark.zip and the
+# spark-core jar on PYTHONPATH.
+set -f
+IFS=:
+kept=
+for entry in $PYTHONPATH; do
+  case $entry in
+    */pyspark.zip | */jars/spark-core_*.jar) ;;
+    *) kept=${kept:+$kept:}$entry ;;
+  esac
+done
+PYTHONPATH=$kept
+export PYTHONPATH
+exec %s "$@"
+"""
+
+
+def _zip_pyspark_version(zip_path: str) -> str | None:
+    """`__version__` of the pyspark inside `zip_path`, None if unreadable."""
+    try:
+        with zipfile.ZipFile(zip_path) as z:
+            text = z.read("pyspark/version.py").decode()
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return None
+    m = re.search(r"""__version__\b[^=]*=\s*["']([^"']+)["']""", text)
+    return m.group(1) if m else None
+
+
+def _worker_python(spark_home: str | None = None) -> str | None:
+    """Path of the worker launcher to use as PYSPARK_PYTHON, or None to
+    leave Spark's worker launch as it is: when the pyspark.zip Spark
+    would use is missing or holds another pyspark version than the one
+    installed, or the launcher cannot be executed where it is written."""
+    import pyspark
+    from pyspark.find_spark_home import _find_spark_home
+
+    home = spark_home or _find_spark_home()
+    zip_path = os.path.join(home, "python", "lib", "pyspark.zip")
+    if _zip_pyspark_version(zip_path) != pyspark.__version__:
+        return None
+    script = _LAUNCHER % shlex.quote(sys.executable)
+    digest = hashlib.sha1(script.encode()).hexdigest()[:16]
+    path = os.path.join(tempfile.gettempdir(), f"postrack-pyworker-{os.getuid()}-{digest}")
+    tmp = f"{path}.{os.getpid()}.tmp"
+    try:
+        with open(tmp, "w") as f:
+            f.write(script)
+        os.chmod(tmp, 0o755)
+        os.replace(tmp, path)
+    except OSError:
+        return None
+    # access() reports EACCES for X_OK on a noexec mount
+    return path if os.access(path, os.X_OK) else None
+
+
+@contextlib.contextmanager
+def _worker_launch(spark_home: str | None = None):
+    """PYSPARK_PYTHON names the worker launcher inside the block when
+    `_worker_python` picks one, and is restored after it; otherwise the
+    environment is left untouched."""
+    launcher = _worker_python(spark_home)
+    if launcher is None:
+        yield
+        return
+    saved = os.environ.get("PYSPARK_PYTHON")
+    os.environ["PYSPARK_PYTHON"] = launcher
+    try:
+        yield
+    finally:
+        if saved is None:
+            os.environ.pop("PYSPARK_PYTHON", None)
+        else:
+            os.environ["PYSPARK_PYTHON"] = saved
 
 
 def configure_session(spark: SparkSession) -> None:
@@ -155,8 +256,6 @@ _PINNED_ORDER: list[str] = []
 # persist/unpersist calls themselves stay outside the critical section
 # (they are py4j round-trips; holding the lock across them would
 # serialize all query construction on the slowest one).
-import threading as _threading  # noqa: E402 — stdlib, trivial import
-
 _PIN_LOCK = _threading.Lock()
 # No single query pins more than ~5 frames; 16 keeps every pin of the
 # current query (and usually the previous one) resident while a
@@ -272,19 +371,31 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
     key = (id(df), target)
-    hit = _FANOUT_CACHE.get(key)
-    if hit is not None:
-        return hit[1]
+    with _FANOUT_LOCK:
+        hit = _FANOUT_CACHE.get(key)
+        if hit is not None:
+            _FANOUT_CACHE.move_to_end(key)
+            return hit[1]
     out = df.repartition(target) if df.rdd.getNumPartitions() < target else df
-    # Keep a ref to the input so id() stays unique for the cache's life.
-    _FANOUT_CACHE[key] = (df, out)
+    with _FANOUT_LOCK:
+        # Keep a ref to the input so id() stays unique while cached.
+        _FANOUT_CACHE[key] = (df, out)
+        _FANOUT_CACHE.move_to_end(key)
+        while len(_FANOUT_CACHE) > _FANOUT_MAX:
+            _FANOUT_CACHE.popitem(last=False)
     return out
 
 
-# (input id, target) -> (input ref, fanned-out plan). The .rdd partition
-# probe costs a plan conversion; memoize it per DataFrame handle (table
-# handles themselves are memoized in _TABLES_CACHE, so ids are stable).
-_FANOUT_CACHE: dict[tuple[int, int], tuple[DataFrame, DataFrame]] = {}
+# (input id, target) -> (input ref, fanned-out plan), least recently
+# used first. The .rdd partition probe costs a plan conversion; memoize
+# it per DataFrame handle (table handles themselves are memoized in
+# _TABLES_CACHE, so ids are stable). Callers also pass frames built per
+# call (read_delta snapshots) that never hit again, so the cache is
+# LRU-capped like the pin registry; 32 covers the ten table handles of
+# each sf_dir a process uses. Evicting only drops references.
+_FANOUT_CACHE: "OrderedDict[tuple[int, int], tuple[DataFrame, DataFrame]]" = OrderedDict()
+_FANOUT_LOCK = _threading.Lock()
+_FANOUT_MAX = 32
 
 
 def _nanos_timestamp_columns(path: str) -> list[str]:

@@ -48,12 +48,18 @@ from postrack_spark.sources.pgoutput import DecoderState, decode_xlogdata_stream
 FRAME_FILE_SUFFIX = ".pgout"
 
 # Bytes of capture files one read partition packs before it closes. A
-# Python DataSource task costs ~0.3 s to launch on a 4-core host even
-# with reused workers (1/6/24/60 partitions of a trivial source: 0.32 /
-# 0.73 / 1.97 / 4.74 s) - about what decoding ~3.7 MB of frames takes
-# (~110k events/s at ~112 B/event). Below this size per task, launches
-# cost more than the decode they parallelise.
-PARTITION_TARGET_BYTES = 4 << 20
+# Python DataSource task has a fixed cost on top of its decode. With
+# the worker launch of session.get_spark (workers on the installed,
+# byte-compiled pyspark), 1/6/24/60 partitions of a trivial source take
+# 0.27 / 0.39 / 0.70 / 1.42 s on a 4-core host: ~19 ms per partition
+# over 4 task slots, so ~77 ms per task, about what decoding ~0.9 MB of
+# frames takes (~110k events/s at ~112 B/event). Below this size per
+# task, launches cost more than the decode they parallelise. Spark's own
+# launch puts the source-only pyspark.zip and the spark-core jar first
+# on the worker path, and each task's importlib.invalidate_caches() then
+# re-reads both zip directories: ~0.28 s per task (0.81 / 0.96 / 1.76 /
+# 4.82 s). scripts/py_worker_cost.py measures both.
+PARTITION_TARGET_BYTES = 1 << 20
 
 
 def frames_to_blob(frames: list[bytes]) -> bytes:
